@@ -191,19 +191,17 @@ object Dump {
     }
     df = cfg.masks(df, cfg.db, table)
 
-    // chunk plan: for JDBC sources the chunk WHEREs become the
-    // `predicates` array (one connection/partition per chunk — S1); a
-    // file source is already split-parallel, so re-scanning per chunk
-    // would only multiply reads. File-source partitioning is therefore
-    // the scan's own splits, or — with orderByPrimary — one range
-    // shuffle on the PK: chunk-equivalent files with ordered rows
-    // (the reference's ORDER BY pk, mydumper_write.c:1055).
-    // chunking column ≠ primary key: the first column is just the range-
-    // split driver; the real PK (if discovered) is threaded via
-    // cfg.primaryKeys and owns the DDL clause + order-by-primary
-    val chunkCol = df.schema.fields.headOption.map(_.name)
+    // write parallelism: the dump never re-scans its source per chunk
+    // (JDBC chunk predicates belong to extract.JdbcExtract, before the
+    // frame gets here) — a frame is already split-parallel, so chunks
+    // are the scan's own splits raised to `targetChunks`, or — with
+    // orderByPrimary — one range shuffle on the PK: chunk-equivalent
+    // files with ordered rows (the reference's ORDER BY pk,
+    // mydumper_write.c:1055). The discovered PK (cfg.primaryKeys) owns
+    // the DDL clause + order-by-primary; without one the first column
+    // is the range-split driver.
     val pk = cfg.primaryKeys.getOrElse(table, Nil)
-    val orderCol = pk.headOption.orElse(chunkCol)
+    val orderCol = pk.headOption.orElse(df.schema.fields.headOption.map(_.name))
     // rows-per-chunk sizing (--rows): chunk count = estimate / rows,
     // clamped to [1, 4096]; the estimate is a sampling probe, not a
     // full scan. Schema-only dumps skip the probe with everything else.
@@ -224,19 +222,6 @@ object Dump {
     // caps the table's write parallelism (chunk count)
     val targetChunks = conf.numThreads.filter(_ > 0)
       .map(n => math.min(sizedChunks, n)).getOrElse(sizedChunks)
-    val strategy = ChunkPlanner.choose(
-      rowEstimate = -1L, // planner probes below instead of catalog stats
-      pkType = chunkCol.map(_ => df.schema.fields.head.dataType.typeName),
-      partitions = Nil)
-    // a schema-only dump must not pay the planner's min/max probe (an
-    // eager aggregation job per table) for a chunk plan it never uses
-    val chunks: Seq[ChunkPlanner.Chunk] =
-      if (noData) Nil
-      else strategy match {
-        case ChunkPlanner.Strategy.IntRange =>
-          ChunkPlanner.planInteger(df, chunkCol.get, targetChunks)
-        case _ => Nil
-      }
     val partitioned =
       if (cfg.orderByPrimary && orderCol.isDefined) {
         // range-split on the LEADING key (file boundaries), but sort
@@ -437,7 +422,7 @@ object Dump {
           s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ ${quoteOf(cfg)}${cfg.db}${quoteOf(cfg)};\n",
         ifAbsent = true)
     TableResult(table, rows, Await.result(checksumF, Duration.Inf),
-      if (noData) 0 else math.max(chunks.size, 1), stem = stem,
+      if (noData) 0 else targetChunks, stem = stem,
       // lake layouts read back in a different shape than they dumped
       // (partitionBy appends partition columns; JSON inference
       // alphabetizes and widens) — record the dump-time schema so the

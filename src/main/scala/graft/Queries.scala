@@ -3240,7 +3240,7 @@ object Queries {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_curate_store").toString + "/s"
     Curation.writeStaged(docs.where(id % 2 === 0), "doc_id", "text", "u",
-      dir, "b1", mode = "overwrite")
+      dir, "b1")
     Curation.writeStaged(docs.where(id % 2 =!= 0), "doc_id", "text", "u",
       dir, "b2")
     Curation.writeStaged(docs.where(id % 2 =!= 0), "doc_id", "text", "u",

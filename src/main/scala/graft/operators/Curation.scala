@@ -197,15 +197,12 @@ object Curation {
     * bp_only) + (canon_url, reg_dom). */
   def writeStaged(docs: DataFrame, idCol: String, textCol: String,
       urlCol: String, path: String, batchId: String,
-      bpMinWords: Int = 4, mode: String = "append"): Unit = {
-    val rows = staged(docs, idCol, textCol, urlCol, bpMinWords)
-      .drop(textCol, "clean_text")
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(docs.sparkSession, path, rows.schema)
-  }
+      bpMinWords: Int = 4): Unit =
+    StoreCompaction.writeBatch(
+      staged(docs, idCol, textCol, urlCol, bpMinWords)
+        .drop(textCol, "clean_text")
+        .withColumn("batch_id", lit(batchId)),
+      path, append = true)
 
   /** Verdicts for EVERY doc across all appended batches, served from the
     * store — identical to [[curate]] over the union of the raw batches

@@ -58,25 +58,22 @@ object FreqStore {
     * `path/items`, the truncation threshold under `path/stats` (groups
     * with fewer than k items carry no stats row — threshold 0). */
   def writeTopK(df: DataFrame, itemCol: String, groupCol: String,
-      path: String, k: Int, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
+      path: String, k: Int, batchId: String = "batch-0"): Unit =
+    putTopK(df, itemCol, groupCol, path, k, batchId, append = false)
+
+  private def putTopK(df: DataFrame, itemCol: String, groupCol: String,
+      path: String, k: Int, batchId: String, append: Boolean): Unit = {
     val (items, stats) = truncated(df, itemCol, groupCol, k)
-    val itemRows = items.withColumn("batch_id", lit(batchId))
-    itemRows.write.mode(mode).parquet(s"$path/items")
-    val statRows = stats.withColumn("batch_id", lit(batchId))
-    statRows.write.mode(mode).parquet(s"$path/stats")
-    // pin both tables' read schemas: snapshot reads skip the footer-
-    // inference job (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, s"$path/items",
-      itemRows.schema)
-    StoreCompaction.writeSchemaHint(df.sparkSession, s"$path/stats",
-      statRows.schema)
+    StoreCompaction.writeBatch(items.withColumn("batch_id", lit(batchId)),
+      s"$path/items", append)
+    StoreCompaction.writeBatch(stats.withColumn("batch_id", lit(batchId)),
+      s"$path/stats", append)
   }
 
   /** Blind-append another batch (replay-neutral via read-side dedup). */
   def appendTopK(df: DataFrame, itemCol: String, groupCol: String,
       path: String, k: Int, batchId: String): Unit =
-    writeTopK(df, itemCol, groupCol, path, k, batchId, mode = "append")
+    putTopK(df, itemCol, groupCol, path, k, batchId, append = true)
 
   /** Merged per-item frequency intervals from the store:
     * (grp, item, lo, hi) with true count ∈ [lo, hi] (see object doc).

@@ -108,7 +108,8 @@ object NearDupStore {
         "reindex into a fresh store instead")
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("batch_id", lit(batchId))
-    base.write.mode("append").partitionBy("batch_id").parquet(s"$path/vecs")
+    StoreCompaction.writeBatch(base, s"$path/vecs", append = true,
+      partitionBy = Seq("batch_id"))
     // cell index derives from the JUST-WRITTEN vectors, not from `embs`:
     // the vecs write above already ran the caller's decode+embed
     // pipeline once, and running it a second time for the index pass
@@ -126,12 +127,8 @@ object NearDupStore {
       .select(lit(batchId).as("batch_id"), col("id"),
         explode(Similarity.cellKeyArray(col("vec"), bits, tables, dim))
           .as("cellkey"))
-    cells.write.mode("append").partitionBy("batch_id").parquet(s"$path/cells")
-    // pin both tables' read schemas for every later snapshot read
-    // (driver-side, `_`-hidden, first writer wins; readers fall back to
-    // inference when absent — StoreCompaction.writeSchemaHint)
-    StoreCompaction.writeSchemaHint(spark, s"$path/vecs", base.schema)
-    StoreCompaction.writeSchemaHint(spark, s"$path/cells", cells.schema)
+    StoreCompaction.writeBatch(cells, s"$path/cells", append = true,
+      partitionBy = Seq("batch_id"))
   }
 
   /** Snapshot read: the store's visible view pinned to the EXPLICIT

@@ -171,19 +171,20 @@ object Sampling {
   /** Write one batch's per-domain counts (null domains excluded — the
     * [[temperatureSample]] contract). */
   def writeDomainCounts(df: DataFrame, domainCol: String, path: String,
-      batchId: String, mode: String = "overwrite"): Unit = {
-    val rows = df.where(col(domainCol).isNotNull)
-      .groupBy(col(domainCol).as("dom")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
+      batchId: String): Unit =
+    StoreCompaction.writeBatch(domainCountRows(df, domainCol, batchId),
+      path, append = false)
 
   def appendDomainCounts(df: DataFrame, domainCol: String, path: String,
       batchId: String): Unit =
-    writeDomainCounts(df, domainCol, path, batchId, mode = "append")
+    StoreCompaction.writeBatch(domainCountRows(df, domainCol, batchId),
+      path, append = true)
+
+  private def domainCountRows(df: DataFrame, domainCol: String,
+      batchId: String): DataFrame =
+    df.where(col(domainCol).isNotNull)
+      .groupBy(col(domainCol).as("dom")).agg(count(lit(1)).as("cnt"))
+      .withColumn("batch_id", lit(batchId))
 
   /** Merged corpus-wide domain counts: replayed batches collapse first,
     * then counts sum — (dom, n_d). */

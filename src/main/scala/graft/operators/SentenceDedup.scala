@@ -106,20 +106,21 @@ object SentenceDedup {
 
   /** Write one batch's corpus-wide sentence-hash counts. */
   def writeCounts(df: DataFrame, textCol: String, idCol: String,
-      path: String, batchId: String, mode: String = "overwrite"): Unit = {
-    val rows = sentences(df, textCol, idCol)
-      .groupBy("sh").agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
+      path: String, batchId: String): Unit =
+    StoreCompaction.writeBatch(countRows(df, textCol, idCol, batchId), path,
+      append = false)
 
   /** Blind-append another batch (replay-neutral). */
   def appendCounts(df: DataFrame, textCol: String, idCol: String,
       path: String, batchId: String): Unit =
-    writeCounts(df, textCol, idCol, path, batchId, mode = "append")
+    StoreCompaction.writeBatch(countRows(df, textCol, idCol, batchId), path,
+      append = true)
+
+  private def countRows(df: DataFrame, textCol: String, idCol: String,
+      batchId: String): DataFrame =
+    sentences(df, textCol, idCol)
+      .groupBy("sh").agg(count(lit(1)).as("cnt"))
+      .withColumn("batch_id", lit(batchId))
 
   /** Merged corpus-wide counts: replayed batches collapse first, then
     * counts sum — (sh, n_occ). Served from the store's visible view

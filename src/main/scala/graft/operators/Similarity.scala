@@ -164,21 +164,16 @@ object Similarity {
     * what is already stored — [[appendIndex]] is a blind append, the
     * same contract as the dedup band store. */
   def writeIndex(embs: DataFrame, path: String, vecCol: String,
-      bits: Int, dim: Int = 64, mode: String = "overwrite"): Unit = {
-    val rows = withCell(embs, vecCol, bits, dim)
-    rows.write.mode(mode).partitionBy("cell").parquet(path)
-    // pin the read schema: index reads skip the per-file footer-
-    // inference job (StoreCompaction.writeSchemaHint; absent ⇒
-    // inference). `cell` is cast to int at creation so the hint's type
-    // matches what partition-dir type inference produced before.
-    StoreCompaction.writeSchemaHint(embs.sparkSession, path, rows.schema)
-  }
+      bits: Int, dim: Int = 64): Unit =
+    StoreCompaction.writeBatch(withCell(embs, vecCol, bits, dim), path,
+      append = false, partitionBy = Seq("cell"))
 
   /** Append a new batch to an existing index (no read-modify-write;
     * batches commit independently). */
   def appendIndex(newEmbs: DataFrame, path: String, vecCol: String,
       bits: Int, dim: Int = 64): Unit =
-    writeIndex(newEmbs, path, vecCol, bits, dim, mode = "append")
+    StoreCompaction.writeBatch(withCell(newEmbs, vecCol, bits, dim), path,
+      append = true, partitionBy = Seq("cell"))
 
   /** Query a persisted index: the nprobe hamming ball over the `cell`
     * partition column prunes partitions during listing, so the scan

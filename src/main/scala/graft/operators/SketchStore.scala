@@ -34,23 +34,22 @@ object SketchStore {
     * `(groupCol, sketch, batch_id)` — one row per group, KBs each
     * (lgConfigK=12 → ≤4 KiB registers). */
   def writeDistinct(df: DataFrame, valueCol: String, groupCol: String,
-      path: String, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
-    val rows = df.groupBy(col(groupCol))
-      .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema so snapshot reads skip the footer-inference
-    // job (driver-side, first writer wins, absent ⇒ inference —
-    // StoreCompaction.writeSchemaHint)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
+      path: String, batchId: String = "batch-0"): Unit =
+    StoreCompaction.writeBatch(sketchRows(df, valueCol, groupCol, batchId),
+      path, append = false)
 
   /** Blind-append another batch's sketches (idempotent under replay —
     * see object doc). */
   def appendDistinct(df: DataFrame, valueCol: String, groupCol: String,
       path: String, batchId: String): Unit =
-    writeDistinct(df, valueCol, groupCol, path, batchId, mode = "append")
+    StoreCompaction.writeBatch(sketchRows(df, valueCol, groupCol, batchId),
+      path, append = true)
+
+  private def sketchRows(df: DataFrame, valueCol: String, groupCol: String,
+      batchId: String): DataFrame =
+    df.groupBy(col(groupCol))
+      .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
+      .withColumn("batch_id", lit(batchId))
 
   /** Per-group distinct estimates from the store: one sketch-union over
     * the (groups × batches) rows — row count is independent of corpus

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Compaction + bounded-listing kernel for the engine's BLIND-APPEND
   * stores (sentence counts, link edges, curation stage rows, ANN cells,
@@ -64,7 +66,10 @@ import org.apache.spark.sql.functions.col
   * still land as root appends and keep their pruning until the next
   * compaction). Query-side partition pruning (ANN `cell`, BM25
   * `bucket`) is preserved by re-partitioning the generation on those
-  * columns (`partitionColumns`). */
+  * columns (`partitionColumns`).
+  *
+  * WRITES: every store batch goes through [[writeBatch]], which also
+  * owns the store's schema hint and its lifetime. */
 private[graft] object StoreCompaction {
 
   private val CmpPrefix = "_graft_cmp_"
@@ -73,25 +78,58 @@ private[graft] object StoreCompaction {
   private val ManifestHeader = "GRAFT-MANIFEST v1"
   private val SchemaHintName = "_schema.ddl"
 
-  /** Persist the store's row schema as a `_`-hidden DDL file so every
-    * later read can PIN it instead of inferring: each un-pinned
-    * `spark.read.parquet` runs a footer-read Spark job before the real
-    * query (mergeSchemasInParallel), and at store-protocol cadence —
-    * q_media_dedup_incremental pays 6 such jobs per run — that is pure
-    * sequential action-barrier latency (guide §5, driver/orchestration).
-    * Driver-side FS write, no job; first writer wins (the store schema
-    * is fixed at creation, same contract as `meta/`); readers fall back
-    * to inference when the file is absent (old stores, crash windows)
-    * or unparsable. */
-  def writeSchemaHint(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
+  /** Write one batch of `rows` into the store at `dir` — the one write
+    * path every blind-append store uses. `append = false` starts the
+    * store over (Spark's overwrite deletes the directory); `append =
+    * true` adds a batch. `partitionBy` names the hive partition columns.
+    *
+    * SCHEMA HINT: the store's row schema lives beside the data as the
+    * `_`-hidden DDL file `_schema.ddl`, and every [[readVisible]] PINS
+    * it instead of inferring — each un-pinned `spark.read.parquet` runs
+    * a footer-read Spark job before the real query
+    * (mergeSchemasInParallel), and at store-protocol cadence
+    * (q_media_dedup_incremental pays 6 such reads per run) that is pure
+    * sequential action-barrier latency. Its lifetime:
+    *   - the FIRST batch fixes the store's column names and types (an
+    *     overwrite always rewrites the hint, since it starts a new store);
+    *   - an append whose `rows.schema` differs from the hint by column
+    *     name or type (nullability ignored) throws
+    *     `IllegalStateException` BEFORE any data file is written, so the
+    *     pinned read never silently casts or null-fills a batch;
+    *   - schema evolution therefore means a fresh store (or a rewritten
+    *     hint), never an in-place append;
+    *   - readers fall back to inference when the hint is absent (stores
+    *     that predate it, a crash between data write and hint create) or
+    *     unparsable; the next append then creates it.
+    * All hint work is driver-side file I/O: no Spark job. */
+  def writeBatch(rows: DataFrame, dir: String, append: Boolean,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val spark = rows.sparkSession
+    if (append) readSchemaHint(spark, dir).foreach { pinned =>
+      def shape(s: StructType) =
+        s.fields.map(f => f.name -> f.dataType.catalogString).toSet
+      if (shape(pinned) != shape(rows.schema))
+        throw new IllegalStateException(
+          s"store at $dir is pinned to schema [${pinned.toDDL}] but the " +
+            s"appended batch has [${rows.schema.toDDL}]; start a fresh " +
+            "store to change its schema")
+    }
+    val writer = rows.write.mode(if (append) "append" else "overwrite")
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
+     else writer).parquet(dir)
+    writeSchemaHint(spark, dir, rows.schema, replace = !append)
+  }
+
+  /** Create the store's `_schema.ddl` when absent (or always, with
+    * `replace`). */
+  private def writeSchemaHint(spark: SparkSession, dir: String,
+      schema: StructType, replace: Boolean): Unit = {
     val (fs, root) = fsFor(spark, dir)
     val p = new Path(root, SchemaHintName)
     try {
-      if (!fs.exists(p)) {
-        val out = fs.create(p, false) // no overwrite: first writer wins
-        try out.write(schema.toDDL.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
+      if (replace || !fs.exists(p)) {
+        val out = fs.create(p, replace)
+        try out.write(schema.toDDL.getBytes(UTF_8))
         finally out.close()
       }
     } catch { case _: java.io.IOException => () } // lost race / RO fs: hint stays optional
@@ -99,25 +137,20 @@ private[graft] object StoreCompaction {
 
   /** The pinned schema hint at `dir`, when present and parsable. */
   private def readSchemaHint(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : Option[StructType] = {
     val (fs, root) = fsFor(spark, dir)
-    val p = new Path(root, SchemaHintName)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8 * 1024)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-          } finally in.close()
-        Some(org.apache.spark.sql.types.StructType.fromDDL(txt))
-      }
-    } catch { case _: Throwable => None }
+    try readSmallFile(fs, new Path(root, SchemaHintName))
+      .map(StructType.fromDDL)
+    catch { case _: Throwable => None }
   }
+
+  /** A small driver-side file's text, or None when it is absent. */
+  private def readSmallFile(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    }
 
   private def fsFor(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -155,25 +188,14 @@ private[graft] object StoreCompaction {
 
   /** The generation's consumed-file manifest, or None when absent or
     * unterminated (= the generation never committed). */
-  private def readManifest(fs: FileSystem, cmpDir: Path): Option[Set[String]] = {
-    val mf = new Path(cmpDir, ManifestName)
-    if (!fs.exists(mf)) return None
-    val in = fs.open(mf)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64 * 1024)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    val lines = text.split("\n", -1).toSeq.dropRight(1) // trailing \n
-    if (lines.length < 3 || lines.head != ManifestHeader ||
-        lines.last != "END") return None
-    val n = lines(1).toIntOption.getOrElse(-1)
-    val paths = lines.slice(2, lines.length - 1)
-    if (paths.length != n) None else Some(paths.toSet)
-  }
+  private def readManifest(fs: FileSystem, cmpDir: Path): Option[Set[String]] =
+    readSmallFile(fs, new Path(cmpDir, ManifestName)).flatMap { text =>
+      val lines = text.split("\n", -1).toSeq.dropRight(1) // trailing \n
+      val paths = lines.slice(2, lines.length - 1)
+      val ok = lines.length >= 3 && lines.head == ManifestHeader &&
+        lines.last == "END" && lines(1).toIntOption.contains(paths.length)
+      if (ok) Some(paths.toSet) else None
+    }
 
   /** One store dir's visible state at a point in time. */
   private[graft] case class Snapshot(
@@ -220,7 +242,7 @@ private[graft] object StoreCompaction {
   }
 
   private def readOf(spark: SparkSession, base: Path, files: Seq[Path],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      schema: Option[StructType]): DataFrame = {
     val r0 = spark.read.option("basePath", base.toString)
     schema.fold(r0)(r0.schema).parquet(files.map(_.toString): _*)
   }
@@ -252,7 +274,7 @@ private[graft] object StoreCompaction {
 
   private def readSnapshot(spark: SparkSession, s: Snapshot, dir: String,
       pinLiveFiles: Boolean,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[StructType] = None)
       : DataFrame = {
     def dirRead(path: String): DataFrame =
       schema.fold(spark.read)(spark.read.schema).parquet(path)
@@ -314,7 +336,7 @@ private[graft] object StoreCompaction {
     val mfBody = (Seq(ManifestHeader, consumed.length.toString) ++
       consumed :+ "END").mkString("", "\n", "\n")
     val out = fs.create(new Path(fin, ManifestName), true)
-    try out.write(mfBody.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(mfBody.getBytes(UTF_8))
     finally out.close()
     // GC: consumed files, their emptied parent dirs (non-recursive
     // delete no-ops on non-empty), and every other generation/temp dir

@@ -314,17 +314,34 @@ class CliFlagSurfaceSpec extends SparkTestBase {
 
   test("reference specific_24 cnf pair drives dump -> load -> checksum " +
       "end-to-end with zero flag translation") {
-    // the reference's own config bytes (test/specific_24: mydumper
-    // threads=8 + outputdir + database rename; myloader threads=8,
-    // worker-pool caps, bare drop-table, directory) feed
-    // --defaults-extra-file exactly as test_mydumper.sh composes it —
-    // proving the option surface COMPOSES through core/DefaultsFile,
-    // not just parses. Only the harness-style wrapper flags (source,
-    // target, checksum, logfile) ride along, as they do in the
-    // reference harness (test_mydumper.sh:249-250).
-    val mcnf = "/root/reference/test/specific_24/mydumper.cnf"
-    val lcnf = "/root/reference/test/specific_24/myloader.cnf"
-    assume(new java.io.File(mcnf).exists && new java.io.File(lcnf).exists)
+    // the reference's test/specific_24 config pair (mydumper threads=8
+    // + outputdir + database rename; myloader threads=8, worker-pool
+    // caps, bare drop-table, directory) feeds --defaults-extra-file
+    // exactly as test_mydumper.sh composes it — proving the option
+    // surface COMPOSES through core/DefaultsFile, not just parses. Only
+    // the harness-style wrapper flags (source, target, checksum,
+    // logfile) ride along, as they do in the reference harness
+    // (test_mydumper.sh:249-250).
+    def cnf(content: String): String = {
+      val f = java.nio.file.Files.createTempFile("graft_s24_", ".cnf")
+      java.nio.file.Files.writeString(f, content)
+      f.toString
+    }
+    val mcnf = cnf(
+      """[mydumper]
+        |threads=8
+        |outputdir=/tmp/data
+        |database=specific_24
+        |""".stripMargin)
+    val lcnf = cnf(
+      """[myloader]
+        |threads=8
+        |max-threads-for-schema-creation=4
+        |max-threads-for-index-creation=4
+        |max-threads-for-post-actions=1
+        |drop-table
+        |directory=/tmp/data
+        |""".stripMargin)
     // the cnf pins outputdir=/tmp/data (the harness wipes it per case)
     val data = new java.io.File("/tmp/data")
     def rm(f: java.io.File): Unit = {

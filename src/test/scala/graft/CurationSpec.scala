@@ -119,8 +119,7 @@ class CurationSpec extends SparkTestBase {
       (10L, prose, "not a url")) // skips 3-4
     val (b1, b2) = all.partition(_._1 % 2 == 0)
     def df(rows: Seq[(Long, String, String)]) = rows.toDF("doc_id", "text", "u")
-    Curation.writeStaged(df(b1), "doc_id", "text", "u", dir, "b1",
-      mode = "overwrite")
+    Curation.writeStaged(df(b1), "doc_id", "text", "u", dir, "b1")
     Curation.writeStaged(df(b2), "doc_id", "text", "u", dir, "b2")
     Curation.writeStaged(df(b2), "doc_id", "text", "u", dir, "b2") // retry replay
     val served = Curation.curateFromStore(spark, dir, "doc_id",

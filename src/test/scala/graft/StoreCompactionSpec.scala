@@ -399,4 +399,94 @@ class StoreCompactionSpec extends SparkTestBase {
       dDir, "b001")
     assert(new java.io.File(s"$dDir/_schema.ddl").isFile)
   }
+
+  /** Every parquet data file under `dir`, recursively. */
+  private def dataFiles(dir: String): Set[String] = {
+    def walk(f: java.io.File): Seq[String] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f.getPath)
+      else Nil
+    walk(new java.io.File(dir)).toSet
+  }
+
+  /** `body` must fail with the pinned-schema error naming `dir`;
+    * returns its message. */
+  private def pinnedMismatch(dir: String)(body: => Unit): String = {
+    val msg = intercept[IllegalStateException](body).getMessage
+    assert(msg.contains(s"store at $dir is pinned to schema"), msg)
+    msg
+  }
+
+  test("an append whose column type differs from the pinned hint fails " +
+      "before writing any data file and leaves the store's view unchanged") {
+    import spark.implicits._
+    val dir = tmpDir("mismatchdom")
+    val s = graft.operators.Sampling
+    s.writeDomainCounts((0 until 20).map(i => s"d${i % 4}.com").toDF("d"),
+      "d", dir, "b001")
+    val files = dataFiles(dir)
+    val view = rowsOf(StoreCompaction.readVisible(spark, dir))
+    val msg = pinnedMismatch(dir)(
+      s.appendDomainCounts((0 until 20).map(i => i % 4).toDF("d"), "d",
+        dir, "b002"))
+    // the message names the pinned DDL and the incoming DDL
+    assert(msg.contains("dom STRING") && msg.contains("dom INT"), msg)
+    assert(dataFiles(dir) === files, "a rejected append must write nothing")
+    assert(rowsOf(StoreCompaction.readVisible(spark, dir)) === view)
+    // a same-typed append still lands
+    s.appendDomainCounts(Seq("d9.com").toDF("d"), "d", dir, "b002")
+    assert(rowsOf(s.storedDomainCounts(spark, dir)).contains("[d9.com,1]"))
+    // an overwrite starts a new store, so it re-pins the schema (dom INT
+    // NOT NULL); nullability alone is no mismatch
+    s.writeDomainCounts((0 until 4).toDF("d"), "d", dir, "b003")
+    s.appendDomainCounts(((0 until 4).map(Option(_)) :+ None).toDF("d"),
+      "d", dir, "b004")
+    assert(rowsOf(s.storedDomainCounts(spark, dir)) ===
+      (0 until 4).map(i => s"[$i,2]"))
+  }
+
+  test("a partitioned store (BM25 postings) rejects a mistyped append " +
+      "before writing any posting or stats file") {
+    import spark.implicits._
+    val dir = tmpDir("mismatchbm25")
+    val docs = (0 until 20).map(i => (i.toLong, s"term${i % 5} body $i"))
+    Retrieval.writeIndexBm25(docs.toDF("doc_id", "text"), "text", "doc_id",
+      dir, buckets = 8, batchId = "b001")
+    val files = dataFiles(dir)
+    def query = rowsOf(Retrieval.queryIndexBm25(spark, dir, "doc_id",
+      Seq("term1", "term2"), buckets = 8))
+    val before = query
+    pinnedMismatch(s"$dir/postings") {
+      Retrieval.appendIndexBm25(docs.map { case (i, t) => (i.toString, t) }
+        .toDF("doc_id", "text"), "text", "doc_id", dir, buckets = 8,
+        batchId = "b002")
+    }
+    assert(dataFiles(dir) === files, "a rejected append must write nothing")
+    assert(query === before)
+  }
+
+  test("the BM25 postings read pins bucket as INT even with partition " +
+      "column type inference disabled") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val docs = (0 until 20).map(i => (i.toLong, s"term${i % 5} body $i"))
+      .toDF("doc_id", "text")
+    // the written rows carry the INT the read pins, so the hint is just
+    // the rows' own schema
+    assert(Retrieval.postingsFor(docs, "text", "doc_id", 8)
+      .schema("bucket").dataType === org.apache.spark.sql.types.IntegerType)
+    val dir = tmpDir("bucketint")
+    Retrieval.writeIndexBm25(docs, "text", "doc_id", dir, buckets = 8,
+      batchId = "b001")
+    val before = rowsOf(StoreCompaction.readVisible(spark, s"$dir/postings"))
+    spark.conf.set(key, "false")
+    try {
+      Retrieval.appendIndexBm25(docs, "text", "doc_id", dir, buckets = 8,
+        batchId = "b002")
+      val pinned = StoreCompaction.readVisible(spark, s"$dir/postings")
+      assert(pinned.schema("bucket").dataType ===
+        org.apache.spark.sql.types.IntegerType)
+      assert(rowsOf(pinned.dropDuplicates("doc_id", "term")) === before)
+    } finally spark.conf.unset(key)
+  }
 }
